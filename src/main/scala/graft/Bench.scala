@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: headline queries (SURVEY §6) on
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -22,13 +20,14 @@ object Bench {
     "dd_winnow_pairs", "sim_ivfpq_topk")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val env = Harness.env
+    val sfDir = env.get("SPARK_GRAFT_SF_DIR").getOrElse("/root/testdata/sf0.1")
     // opt-in subset (comma list) for decades where only some headline
     // tables exist — e.g. the sf100 magnitude-probe set has the fact
     // tables but no documents/embeddings. Unset = full headline list
     // (the driver's per-round contract); certification semantics are
     // unchanged within whatever set runs.
-    val headline: Seq[String] = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
+    val headline: Seq[String] = env.get("SPARK_GRAFT_BENCH_ONLY") match {
       case Some(s) =>
         val want = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
         val unknown = want -- Bench.headline.toSet
@@ -40,15 +39,10 @@ object Bench {
         Bench.headline.filter(want)
       case None    => Bench.headline
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "24g"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = env.positiveInt("SPARK_GRAFT_CPUS", 32)
+    val reps = env.positiveInt("SPARK_GRAFT_BENCH_REPS", 5)
+    val maxReps = env.positiveInt("SPARK_GRAFT_BENCH_MAX_REPS", 25)
+    val spark = Harness.session(cpus)
 
     def exec(name: String, dir: String): Unit =
       SparkEntry.queries(name)(spark, dir)
@@ -85,8 +79,6 @@ object Bench {
     // ratio + per-query valid sample counts, so a still-dirty run (or a
     // plan with genuinely bimodal latency, which no amount of retrying
     // certifies) is visible as such rather than as a regression.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
-    val maxReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_REPS", "25").toInt
     val samples = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     def oneRound(): Unit = headline.foreach { name =>
@@ -157,12 +149,10 @@ object Bench {
       val q = e.filter(col("vec_id") < 10)
       val c = e.filter(col("vec_id") >= 10)
       // one temp dir per build rep (each rep rewrites the cell layout),
-      // all removed in the finally below — bench runs used to litter
-      // target/ with index artifacts (r8 ADVICE)
+      // all removed in the finally below
       val dirs = scala.collection.mutable.Buffer[java.nio.file.Path]()
       def dir(): String = {
-        val p = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("target"), "ivfpq_bench_")
+        val p = TempDirs.create("ivfpq_bench_")
         dirs += p
         p.toString
       }
@@ -181,17 +171,13 @@ object Bench {
           (System.nanoTime() - t0) / 1e9
         }
         (bts.min, pts.min)
-      } finally dirs.foreach { p =>
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      }
+      } finally dirs.foreach(TempDirs.delete)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] ivfpq build/probe split failed: ${e.getMessage}")
       (-1.0, -1.0)
     }
     println(render(results, counts, sfDir, done, math.min(reps, done), worstRatio(),
-      calibrate(), total001, buildSec, probeSec, DataFp.of(sfDir), cpus.toInt))
+      calibrate(), total001, buildSec, probeSec, DataFp.of(sfDir), cpus))
     spark.stop()
   }
 
@@ -234,15 +220,15 @@ object Bench {
     // a query with zero valid samples still fails certification — its
     // wall time is missing from `total`, so the run isn't comparable
     val certified = ratio <= 1.2 && ratio >= 0.0 && counts.values.forall(_ > 0)
-    val ratioStr = if (ratio.isInfinite) "-1.0" else f"$ratio%.4f"
-    val calibStr = f"$calib%.4f"
-    val t001Str = f"$total001%.4f"
-    val buildStr = f"$ivfpqBuild%.4f"
-    val probeStr = f"$ivfpqProbe%.4f"
+    val ratioStr = if (ratio.isInfinite) "-1.0" else Harness.num(ratio, 4)
+    val calibStr = Harness.num(calib, 4)
+    val t001Str = Harness.num(total001, 4)
+    val buildStr = Harness.num(ivfpqBuild, 4)
+    val probeStr = Harness.num(ivfpqProbe, 4)
     // cpus/master echo the resolved $SPARK_GRAFT_CPUS contract back to the
     // driver: its 8-vs-32-core scaling heuristic fired a false
     // `suspect_cpus_ignored` in r14 because the JSON didn't say which core
     // count produced the run (observability only — no timed-path change)
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(_._1)},"queries_median":${json(_._2)},"samples":$sampleJson,"reps":$reps,"window":$window,"certified":$certified,"median_over_min":$ratioStr,"calib_sec":$calibStr,"total_sf001":$t001Str,"ivfpq_build_sec":$buildStr,"ivfpq_probe_sec":$probeStr,"data_fp":"$dataFp","cpus":$cpus,"master":"local[$cpus]","sf":"$sfDir"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(_._1)},"queries_median":${json(_._2)},"samples":$sampleJson,"reps":$reps,"window":$window,"certified":$certified,"median_over_min":$ratioStr,"calib_sec":$calibStr,"total_sf001":$t001Str,"ivfpq_build_sec":$buildStr,"ivfpq_probe_sec":$probeStr,"data_fp":"$dataFp","cpus":$cpus,"master":"local[$cpus]","sf":${Harness.jsonString(sfDir)}}"""
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Solo-timing main — NOT part of the driver contract. Times named
   * SparkEntry queries ONE AT A TIME (no concurrency, unlike Verify's
   * 4-way pool, whose timings.json gauge conflates contention with
@@ -24,17 +22,9 @@ object Solo {
       else (2, args.drop(1).toSeq)
     require(names.nonEmpty,
       "usage: graft.Solo <sfDir> [reps] <query> [query ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-solo").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "24g"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = Harness.session(Harness.env.positiveInt("SPARK_GRAFT_CPUS", 32))
     val times = names.map { name =>
       val ts = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
@@ -45,11 +35,9 @@ object Solo {
       name -> ts.min
     }
     val body = times
-      .map { case (k, v) =>
-        s""""$k":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))}"""
-      }
+      .map { case (k, v) => s""""$k":${Harness.num(v, 3)}""" }
       .mkString("{", ",", "}")
-    println(s"""{"mode":"solo","sf":"$d","reps":$reps,"data_fp":"${DataFp.of(d)}","queries":$body}""")
+    println(s"""{"mode":"solo","sf":${Harness.jsonString(d)},"reps":$reps,"data_fp":"${DataFp.of(d)}","queries":$body}""")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryProgress
@@ -68,7 +68,7 @@ object StreamBench {
     * the in-order delivery contract the stateful twins document.
     */
   private def writeChunked(df: DataFrame, orderCols: Seq[String],
-      dir: String, chunks: Int): Unit = {
+      dir: String, staging: String, chunks: Int): Unit = {
     val n = df.count()
     val per = math.max(1L, (n + chunks - 1) / chunks)
     val w = org.apache.spark.sql.expressions.Window
@@ -78,7 +78,6 @@ object StreamBench {
     val ranked = df.withColumn("__rn", row_number().over(w))
       .withColumn("__chunk", ((col("__rn") - 1L) / per).cast("int"))
       .drop("__rn")
-    val staging = java.nio.file.Files.createTempDirectory("graft_sb_stage").toString
     new java.io.File(dir).mkdirs()
     val base = 1700000000000L
     (0 until chunks).foreach { i =>
@@ -98,7 +97,7 @@ object StreamBench {
       stateRowsMax: Long, stateBytesMax: Long, stateRowsLast: Long) {
     def json: String = {
       val rps = if (wallSec > 0) rows / wallSec else -1.0
-      f"""{"rows":$rows,"batches":$batches,"wall_sec":$wallSec%.3f,"rows_per_sec":${rps.toLong},"state_rows_max":$stateRowsMax,"state_bytes_max":$stateBytesMax,"state_rows_last":$stateRowsLast}"""
+      s"""{"rows":$rows,"batches":$batches,"wall_sec":${Harness.num(wallSec, 3)},"rows_per_sec":${rps.toLong},"state_rows_max":$stateRowsMax,"state_bytes_max":$stateBytesMax,"state_rows_last":$stateRowsLast}"""
     }
   }
 
@@ -108,11 +107,11 @@ object StreamBench {
     * readout: with a TTL the final batch's state reflects only keys
     * still active inside the TTL horizon.
     */
-  private def run(spark: SparkSession, collector: Collector,
+  private def run(collector: Collector, root: java.nio.file.Path,
       out: DataFrame, mode: String): Meas = {
     val q = out.writeStream.format("noop").outputMode(mode)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_sb_ckpt").toString)
+        java.nio.file.Files.createTempDirectory(root, "ckpt").toString)
       .start()
     val id = q.id
     try {
@@ -136,19 +135,13 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val d = args(0)
     val chunks = if (args.length > 1) args(1).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-stream-bench").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.env.positiveInt("SPARK_GRAFT_CPUS", 32))
     import spark.implicits._
     val collector = new Collector
     spark.streams.addListener(collector)
-
-    val root = java.nio.file.Files.createTempDirectory("graft_sb").toString
+    // the fabricated feeds, their staging and the checkpoints
+    val rootPath = TempDirs.create("stream_bench_")
+    val root = rootPath.toString
 
     // feed 1: events as CdcEvent (scd2/cdc/gap-fill/funnel/growth/
     // late/transitions/kmv all read this shape)
@@ -157,7 +150,7 @@ object StreamBench {
       Tables.events(spark, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value")),
-      Seq("ts", "event_id"), cdcDir, chunks)
+      Seq("ts", "event_id"), cdcDir, s"$root/cdc_stage", chunks)
     val cdcSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
@@ -174,7 +167,7 @@ object StreamBench {
         .select(col("o_custkey").as("user_id"), col("o_orderkey").as("order_id"),
           col("o_orderdate").cast("timestamp").as("ts"),
           (round(col("o_totalprice") * 100.0)).cast("long").as("cents")),
-      Seq("ts", "order_id"), ewmaDir, chunks)
+      Seq("ts", "order_id"), ewmaDir, s"$root/ewma_stage", chunks)
     val ewmaSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("order_id", org.apache.spark.sql.types.LongType),
@@ -184,29 +177,29 @@ object StreamBench {
       .option("maxFilesPerTrigger", "1").parquet(ewmaDir)
 
     val results = scala.collection.mutable.LinkedHashMap[String, Meas]()
-    results("st_window_agg") = run(spark, collector,
+    results("st_window_agg") = run(collector, rootPath,
       Streaming.windowAggStream(cdcStream()), "append")
-    results("st_sliding_distinct_kmv") = run(spark, collector,
+    results("st_sliding_distinct_kmv") = run(collector, rootPath,
       Streaming.kmvStream(cdcStream().as[Streaming.KmvEvent], 64).toDF(), "update")
-    results("st_scd2") = run(spark, collector,
+    results("st_scd2") = run(collector, rootPath,
       Streaming.scd2Stream(cdcStream().as[Streaming.CdcEvent]).toDF(), "update")
-    results("st_cdc") = run(spark, collector,
+    results("st_cdc") = run(collector, rootPath,
       Streaming.cdcStream(cdcStream().as[Streaming.CdcEvent]).toDF(), "update")
-    results("st_gap_fill") = run(spark, collector,
+    results("st_gap_fill") = run(collector, rootPath,
       Streaming.gapFillStream(cdcStream().as[Streaming.CdcEvent]).toDF(), "update")
-    results("q44_funnel_stream") = run(spark, collector,
+    results("q44_funnel_stream") = run(collector, rootPath,
       Streaming.funnelStream(cdcStream().as[Streaming.CdcEvent]).toDF(), "update")
-    results("q129_growth_stream") = run(spark, collector,
+    results("q129_growth_stream") = run(collector, rootPath,
       Streaming.growthStream(cdcStream().as[Streaming.CdcEvent]).toDF(), "append")
-    results("q62_late_stream") = run(spark, collector,
+    results("q62_late_stream") = run(collector, rootPath,
       Streaming.lateStream(cdcStream()
         .select(col("event_id"), col("ts"), col("user_id"))
         .as[Streaming.LateEvent]).toDF(), "append")
-    results("q65_transitions_stream") = run(spark, collector,
+    results("q65_transitions_stream") = run(collector, rootPath,
       Streaming.transitionsStream(cdcStream()
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
         .as[Streaming.TransEvent]).toDF(), "append")
-    results("q58_ewma_stream") = run(spark, collector,
+    results("q58_ewma_stream") = run(collector, rootPath,
       Streaming.ewmaStream(ewmaStream().as[Streaming.EwmaEvent]).toDF(), "append")
     // eviction variants: same twins, idle keys (no activity for 180
     // event-time days) evicted — the dormant-key ceiling vs the
@@ -215,11 +208,11 @@ object StreamBench {
     // demonstrates the ACTIVE-set bound (returning dormant keys
     // restart — documented semantics, spec-pinned on the planted case).
     val ttlMs = 180L * 86400000L
-    results("q58_ewma_stream_ttl") = run(spark, collector,
+    results("q58_ewma_stream_ttl") = run(collector, rootPath,
       Streaming.ewmaStream(
         ewmaStream().withWatermark("ts", "1 minute").as[Streaming.EwmaEvent],
         Some(ttlMs)).toDF(), "append")
-    results("q65_transitions_stream_ttl") = run(spark, collector,
+    results("q65_transitions_stream_ttl") = run(collector, rootPath,
       Streaming.transitionsStream(cdcStream()
         .withWatermark("ts", "1 minute")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
@@ -227,11 +220,8 @@ object StreamBench {
 
     val body = results.map { case (k, m) => s""""$k":${m.json}""" }
       .mkString("{", ",", "}")
-    println(s"""{"mode":"stream_bench","sf":"$d","chunks":$chunks,"data_fp":"${DataFp.of(d)}","twins":$body}""")
-    // cleanup the fabricated feed
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
-      .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
+    println(s"""{"mode":"stream_bench","sf":${Harness.jsonString(d)},"chunks":$chunks,"data_fp":"${DataFp.of(d)}","twins":$body}""")
+    TempDirs.delete(rootPath)
     spark.stop()
   }
 }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -95,34 +95,24 @@ object Verify {
     }
   }
 
-  private def deleteRecursively(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(deleteRecursively))
-    p.delete(): Unit
-  }
-
   def main(args: Array[String]): Unit = {
     // driver contract: (sfDir, outDir); extra args = local-iteration
     // filter, dump only the named queries
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val env = Harness.env
+    val cpus = env.positiveInt("SPARK_GRAFT_CPUS", 4)
     // SPARK_GRAFT_SHUFFLE decouples the shuffle fan-out from the core
     // count so tools/shape_sweep.py can prove results are identical on
     // ANY cluster shape (partitions ∈ {7,32,257}, local[4] vs local[32])
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "24g"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val shuffle = env.positiveInt("SPARK_GRAFT_SHUFFLE", cpus)
     val headroomBytes =
-      (sys.env.getOrElse("SPARK_GRAFT_VERIFY_HEADROOM_GB", "10").toDouble * 1e9).toLong
-    val force = sys.env.get("SPARK_GRAFT_VERIFY_FORCE").contains("1")
+      (env.positiveDouble("SPARK_GRAFT_VERIFY_HEADROOM_GB", 10.0) * 1e9).toLong
+    val force = env.get("SPARK_GRAFT_VERIFY_FORCE").contains("1")
+    val coalesce = !env.get("SPARK_GRAFT_VERIFY_COALESCE").contains("0")
+    val spark = Harness.session(cpus, shuffle)
+    new java.io.File(outDir).mkdirs()
     // run queries on a small thread pool: Spark's scheduler interleaves
     // the jobs and the long ML fits overlap the cheap relational dumps
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
@@ -177,9 +167,7 @@ object Verify {
                 myReservation =
                   est.map(_.min(BigInt(Long.MaxValue)).toLong).getOrElse(0L)
                 reserved.addAndGet(myReservation): Unit
-                val out =
-                  if (sys.env.get("SPARK_GRAFT_VERIFY_COALESCE").contains("0")) res
-                  else res.coalesce(1)
+                val out = if (coalesce) res.coalesce(1) else res
                 out.write.mode("overwrite").parquet(s"$outDir/$name")
                 timings.put(name, (System.nanoTime() - t0) / 1e9)
             }
@@ -189,7 +177,7 @@ object Verify {
             // disk-full (or any) write failure: free the partial dump so
             // this query's corpse doesn't take the rest of the batch down
             if (dumpDir.exists()) {
-              deleteRecursively(dumpDir)
+              TempDirs.deleteTree(dumpDir)
               System.err.println(s"[verify] $name partial dump deleted")
             }
           }
@@ -204,11 +192,7 @@ object Verify {
     locally {
       import scala.jdk.CollectionConverters._
       val body = timings.asScala.toSeq.sortBy(_._1)
-        // Locale.ROOT: the f-interpolator honors the JVM default
-        // locale, and a comma decimal separator would emit invalid JSON
-        .map { case (k, v) =>
-          s""""$k":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))}"""
-        }
+        .map { case (k, v) => s""""$k":${Harness.num(v, 3)}""" }
         // input-data fingerprint: timings are only comparable across
         // runs with identical data (see DataFp); the underscore prefix
         // sorts it first and can't collide with a query name
@@ -216,20 +200,9 @@ object Verify {
         .mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/timings.json"), body)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -1560,18 +1560,6 @@ object MlC extends Module {
     import org.apache.spark.ml.classification._
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    // per-(family,fold) wall seconds, printed to stderr when
-    // GRAFT_ML_PROFILE is set — the only way to see where the panel's
-    // 33 pooled fits actually spend their time (pooled wall time hides
-    // which family dominates). Collection cost is two nanoTime calls
-    // per fit; reporting is off the timed path.
-    val profile = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Double)]()
-    def timed[T](family: String, fold: Int)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      profile.add((family, fold, (System.nanoTime() - t0) / 1e9))
-      r
-    }
     val df = assembler.transform(customerFeatures(s, d))
       .withColumn("fold", pmod(xxhash64(col("c_custkey"), lit(42L)), lit(3L)))
       .select("c_custkey", "features", "label", "fold")
@@ -1606,7 +1594,7 @@ object MlC extends Module {
       (acc, f1)
     }
     val fitted = families.map { case (name, est) =>
-      name -> (0 until 3).map { f => Future { timed(name, f) {
+      name -> (0 until 3).map { f => Future {
         // per-Future copy — the 3 folds of one family fit concurrently
         // and must not share an Estimator instance (see foldScore)
         val m = est.copy(org.apache.spark.ml.param.ParamMap.empty)
@@ -1615,7 +1603,7 @@ object MlC extends Module {
         val preds = m.transform(df.filter(col("fold") === f))
         val (acc, f1) = countMetrics(preds)
         (acc, f1, exactAucRaw(preds))
-      } } }
+      } }
     }
     // kNN family (the reference roster's KNeighborsClassifier; MLlib has
     // no kNN, so graft's own neighbor-join machinery backs the row):
@@ -1632,7 +1620,7 @@ object MlC extends Module {
       val bkt = (col("c_custkey") % lit(1000000007L)) * lit(654435747L) %
         lit(1000000007L) % lit(1000L)
       val xs = org.apache.spark.ml.functions.vector_to_array(col("features"))
-      val folds = (0 until 3).map { f => Future { timed("knn", f) {
+      val folds = (0 until 3).map { f => Future {
         val tr = df.filter(col("fold") =!= f)
         val te = df.filter(col("fold") === f)
         val stats = tr.select(posexplode(xs).as(Seq("pos", "v")))
@@ -1662,7 +1650,7 @@ object MlC extends Module {
         val (acc, f1) = countMetrics(preds)
         val auc = exactAucParts(preds, col("score"), col("label"))._3
         (acc, f1, auc)
-      } } }
+      } }
       "knn" -> folds
     }
     // Kernel-SVC family (the roster's `from sklearn.svm import SVC`,
@@ -1685,7 +1673,7 @@ object MlC extends Module {
       val wMat = Array.fill(dRff, nf)(rng.nextGaussian() * math.sqrt(2.0 * gamma))
       val bVec = Array.fill(dRff)(rng.nextDouble() * 2.0 * math.Pi)
       val xs = org.apache.spark.ml.functions.vector_to_array(col("features"))
-      val folds = (0 until 3).map { f => Future { timed("svc_rff", f) {
+      val folds = (0 until 3).map { f => Future {
         val tr = df.filter(col("fold") =!= f)
         val te = df.filter(col("fold") === f)
         val stats = tr.select(posexplode(xs).as(Seq("pos", "v")))
@@ -1707,27 +1695,27 @@ object MlC extends Module {
         val preds = m.transform(mapped(te))
         val (acc, f1) = countMetrics(preds)
         (acc, f1, exactAucRaw(preds))
-      } } }
+      } }
       "svc_rff" -> folds
     }
     // AdaBoost family (the roster's AdaBoostClassifier; MLlib lacks it
     // — graft's own weighted-stump boosting backs the row, margin as
     // the AUC ranking score)
     val adaboost = {
-      val folds = (0 until 3).map { f => Future { timed("adaboost", f) {
+      val folds = (0 until 3).map { f => Future {
         val (preds, _) = adaboostFit(df.filter(col("fold") =!= f),
           df.filter(col("fold") === f), rounds = 6, seed = 42L)
         val pr = preds.select(col("label"), col("prediction"), col("margin").as("score"))
         val (acc, f1) = countMetrics(pr)
         val auc = exactAucParts(pr, col("score"), col("label"))._3
         (acc, f1, auc)
-      } } }
+      } }
       "adaboost" -> folds
     }
     // DummyClassifier(most_frequent): constant majority-of-train-folds
     // prediction; binarized AUC degenerates to (recall1 + recall0)/2
     val dummy = {
-      val folds = (0 until 3).map { f => Future { timed("dummy", f) {
+      val folds = (0 until 3).map { f => Future {
         val maj = df.filter(col("fold") =!= f)
           .agg(sum(col("label")), count(lit(1))).head() match {
           case r0 => if (r0.getDouble(0) * 2.0 > r0.getLong(1)) 1.0 else 0.0
@@ -1735,7 +1723,7 @@ object MlC extends Module {
         val preds = df.filter(col("fold") === f).withColumn("prediction", lit(maj))
         val (acc, f1) = countMetrics(preds)
         (acc, f1, 0.5)
-      } } }
+      } }
       "dummy" -> folds
     }
     // DummyClassifier(strategy="uniform") — the reference's ACTUAL
@@ -1754,14 +1742,14 @@ object MlC extends Module {
     // mean; over re-seeds at fold sizes like these it converges to
     // this value only as the fold grows.
     val dummyUniform = {
-      val folds = (0 until 3).map { f => Future { timed("dummy_uniform", f) {
+      val folds = (0 until 3).map { f => Future {
         val r0 = df.filter(col("fold") === f)
           .agg(sum(col("label")), count(lit(1))).head()
         val pi = r0.getDouble(0) / r0.getLong(1).toDouble
         val prec = pi; val rec = 0.5
         val f1 = if (prec + rec > 0.0) 2.0 * prec * rec / (prec + rec) else 0.0
         (0.5, f1, 0.5)
-      } } }
+      } }
       "dummy_uniform" -> folds
     }
     val rows = (fitted :+ knn :+ svcRff :+ adaboost :+ dummy :+ dummyUniform).map {
@@ -1771,17 +1759,6 @@ object MlC extends Module {
           folds.map(_._3).sum / 3.0)
     }
     df.unpersist()
-    if (sys.env.contains("GRAFT_ML_PROFILE")) {
-      import scala.jdk.CollectionConverters._
-      val byFamily = profile.asScala.toSeq.groupBy(_._1).toSeq
-        .map { case (fam, xs) => (fam, xs.map(_._3).sum, xs.sortBy(_._2)) }
-        .sortBy(-_._2)
-      System.err.println("[ml_model_panel profile] family fit-wall seconds (sum over 3 folds; pooled, so sums exceed wall):")
-      byFamily.foreach { case (fam, tot, xs) =>
-        val perFold = xs.map(t => f"f${t._2}=${t._3}%.1f").mkString(" ")
-        System.err.println(f"[ml_model_panel profile]   $fam%-14s ${tot}%7.1f s  ($perFold)")
-      }
-    }
     rows.sortBy(_._1)
     } finally pool.shutdown()
   }

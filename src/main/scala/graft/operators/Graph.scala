@@ -88,10 +88,6 @@ object Graph {
     */
   def kcoreWithRounds(edges: DataFrame, k: Int,
       maxRounds: Int = 50): (DataFrame, Int) = {
-    // per-round wall + survivor counts to stderr when GRAFT_KCORE_PROFILE
-    // is set — the only way to see where the peel's time goes (round
-    // count × which stage) without the (disabled) UI
-    val prof = sys.env.contains("GRAFT_KCORE_PROFILE")
     var e = edges.select(col("src"), col("dst")).graftCheckpoint()
     // carry the surviving-edge count across rounds: the convergence
     // check costs ONE count job per peel round (on the new edge set),
@@ -102,21 +98,16 @@ object Graph {
     var rounds = 0
     while (!done && rounds < maxRounds) {
       rounds += 1
-      val t0 = System.nanoTime()
       val both = e.select(col("src").as("id"))
         .unionByName(e.select(col("dst").as("id")))
       val degrees = both.groupBy(col("id")).agg(count(lit(1)).as("deg"))
         .graftCheckpoint()
-      val t1 = System.nanoTime()
       val keep = degrees.filter(col("deg") >= k).select(col("id"))
       val e2 = e.join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
         .graftCheckpoint()
       val e2Count = e2.count()
-      if (prof) System.err.println(
-        f"[kcore profile] round $rounds: deg ${(t1 - t0) / 1e9}%.2fs, " +
-        f"peel ${(System.nanoTime() - t1) / 1e9}%.2fs, edges $eCount -> $e2Count")
       if (e2Count == eCount) done = true
       e = e2
       eCount = e2Count

@@ -94,15 +94,13 @@ object Ivf {
       .select("query_id", "corpus_id", "cosine", "rank")
   }
 
-  /** One-shot build + probe (sim_ivf_topk); the index lands in a temp dir
-    * under target/.
+  /** One-shot build + probe (sim_ivf_topk). The index lands in a
+    * [[graft.TempDirs]] dir that lives until JVM exit: the returned frame
+    * scans it lazily (see IvfPq.ivfPqTopK).
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       embCol: String, k: Int, nClusters: Int, nProbe: Int): DataFrame = {
-    val base = java.nio.file.Paths.get("target")
-    val dir = (if (java.nio.file.Files.isDirectory(base))
-        java.nio.file.Files.createTempDirectory(base, "ivf_index_")
-      else java.nio.file.Files.createTempDirectory("ivf_index_")).toString
+    val dir = graft.TempDirs.create("ivf_index_").toString
     val index = buildIndex(corpus, idCol, embCol, nClusters, dir)
     probeIndex(index, queries, idCol, embCol, k, nProbe)
   }

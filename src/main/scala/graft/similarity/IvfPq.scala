@@ -136,46 +136,19 @@ object IvfPq {
       .select("query_id", "corpus_id", "cosine", "rank")
   }
 
-  /** One-shot index dirs created by THIS JVM, all deleted by a single
-    * shutdown hook: repeated bench reps/verify runs used to leave one
-    * ivfpq_index_* dir per invocation under target/ forever (r8 ADVICE
-    * class). An earlier fix deleted the PREVIOUS dir at the start of the
-    * NEXT ivfPqTopK call, which (a) charged a file-tree walk + deletes to
-    * the timed query path (part of sim_ivfpq_topk's r14 −10%), and
-    * (b) raced Verify's concurrent query pool — probeIndex returns a
-    * LAZY DataFrame over spark.read.parquet(dir), and two registered
-    * queries (sim_ivfpq_topk, sim_recall_eval) call ivfPqTopK in the
-    * same JVM, so the delete could remove a directory another thread's
-    * pending scan still needed. At shutdown every returned frame has
-    * been consumed or abandoned, so deletion is race-free and costs the
-    * benchmark nothing.
+  /** One-shot build + probe (sim_ivfpq_topk). The index dir is a
+    * [[graft.TempDirs]] dir deleted at JVM exit, not sooner: probeIndex
+    * returns a LAZY DataFrame over spark.read.parquet(dir), and two
+    * registered queries (sim_ivfpq_topk, sim_recall_eval) call this in
+    * the same JVM, so under Verify's concurrent pool an earlier delete
+    * could remove a directory another thread's pending scan still needs.
+    * Deleting at exit also keeps the file-tree walk off the timed query
+    * path.
     */
-  private val oneShotDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val cleanupHooked = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private def trackForShutdownCleanup(dir: String): Unit = {
-    oneShotDirs.add(dir)
-    if (cleanupHooked.compareAndSet(false, true)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        oneShotDirs.forEach(d => rm(new java.io.File(d)))
-      }, "graft-ivfpq-index-cleanup"))
-    }
-  }
-
-  /** One-shot build + probe (sim_ivfpq_topk); index lands under target/. */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       embCol: String, k: Int, nClusters: Int, nProbe: Int,
       m: Int = 8, ksub: Int = 16): DataFrame = {
-    val base = java.nio.file.Paths.get("target")
-    val dir = (if (java.nio.file.Files.isDirectory(base))
-        java.nio.file.Files.createTempDirectory(base, "ivfpq_index_")
-      else java.nio.file.Files.createTempDirectory("ivfpq_index_")).toString
-    trackForShutdownCleanup(dir)
+    val dir = graft.TempDirs.create("ivfpq_index_").toString
     val index = buildIndex(corpus, idCol, embCol, nClusters, m, ksub, dir)
     probeIndex(index, queries, idCol, embCol, k, nProbe)
   }

@@ -515,20 +515,20 @@ object SimE extends Module {
         .select(col("query_id"), col("corpus_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
         .map { case (k2, v) => k2 -> v.map(_._2).toSet }
-      val base = java.nio.file.Paths.get("target")
-      val dir = (if (java.nio.file.Files.isDirectory(base))
-          java.nio.file.Files.createTempDirectory(base, "ivf_sweep_")
-        else java.nio.file.Files.createTempDirectory("ivf_sweep_")).toString
-      val index = Ivf.buildIndex(c, "vec_id", "embedding", nClusters = 16, dir)
-      val rows = Seq(1, 2, 4, 8, 16).map { np =>
-        val got = Ivf.probeIndex(index, q, "vec_id", "embedding", k = 5, nProbe = np)
-          .select(col("query_id"), col("corpus_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
-          .map { case (k2, v) => k2 -> v.map(_._2).toSet }
-        val recalls = truth.map { case (qid, t) =>
-          got.getOrElse(qid, Set.empty).intersect(t).size.toDouble / t.size
+      // every probe below is collected eagerly, so the index is dead
+      // once the rows are in hand
+      val rows = graft.TempDirs.using("ivf_sweep_") { dir =>
+        val index = Ivf.buildIndex(c, "vec_id", "embedding", nClusters = 16, dir.toString)
+        Seq(1, 2, 4, 8, 16).map { np =>
+          val got = Ivf.probeIndex(index, q, "vec_id", "embedding", k = 5, nProbe = np)
+            .select(col("query_id"), col("corpus_id")).collect()
+            .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
+            .map { case (k2, v) => k2 -> v.map(_._2).toSet }
+          val recalls = truth.map { case (qid, t) =>
+            got.getOrElse(qid, Set.empty).intersect(t).size.toDouble / t.size
+          }
+          (np.toLong, truth.size.toLong, recalls.sum / recalls.size)
         }
-        (np.toLong, truth.size.toLong, recalls.sum / recalls.size)
       }
       rows.toDF("nprobe", "n_queries", "mean_recall")
     },

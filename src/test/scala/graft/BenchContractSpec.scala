@@ -66,6 +66,17 @@ class BenchContractSpec extends AnyFunSuite {
     assert(DataFp.of(dir.toString) === before, "non-parquet files must not count")
   }
 
+  test("metrics line stays valid JSON under a comma-decimal default locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    val l = try line(1.5, Map("q01_agg" -> 5, "st_window_agg" -> 5))
+      finally java.util.Locale.setDefault(saved)
+    Seq("\"median_over_min\":1.5000,", "\"calib_sec\":0.0700,",
+      "\"total_sf001\":4.5000,", "\"ivfpq_build_sec\":1.2000,",
+      "\"ivfpq_probe_sec\":0.3000,")
+      .foreach(k => assert(l.contains(k), s"missing $k in: $l"))
+  }
+
   test("zero-sample queries fail certification") {
     val l = line(1.05, Map("q01_agg" -> 5, "st_window_agg" -> 0))
     assert(l.contains("\"certified\":false"), l)

@@ -54,7 +54,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivf probe scans only the probed cluster partitions (directory pruning)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = TempDirs.create("ivf_spec_").toString
     val index = Ivf.buildIndex(corpus, "vec_id", "embedding", nClusters = 8, path = dir)
     val res = Ivf.probeIndex(index, queries, "vec_id", "embedding", k = 5, nProbe = 2)
     val plan = res.queryExecution.executedPlan.toString
@@ -133,7 +133,7 @@ class SimilaritySpec extends SparkSpec {
   test("ivf-pq probes pruned cells, re-ranks exactly, stays deterministic") {
     val bruteAll = Similarity.bruteTopK(queries, corpus, "vec_id", "embedding", 490)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
+    val dir = TempDirs.create("ivfpq_spec_").toString
     val index = IvfPq.buildIndex(corpus, "vec_id", "embedding",
       nClusters = 8, m = 8, ksub = 16, path = dir)
     val res = IvfPq.probeIndex(index, queries, "vec_id", "embedding", k = 5, nProbe = 4)
@@ -244,5 +244,26 @@ class SimilaritySpec extends SparkSpec {
     assert(recalls.sameElements(recalls.sorted), s"non-monotone: ${recalls.toSeq}")
     // nprobe = nClusters probes every cell: exhaustive = brute = 1.0
     assert(recalls.last === 1.0)
+    // every probe is collected inside the builder, so its index is gone
+    val pid = ProcessHandle.current().pid()
+    val left = TempDirs.root.toFile.list().filter(_.startsWith(s"ivf_sweep_pid${pid}_"))
+    assert(left.isEmpty, s"sim_ivf_sweep left ${left.mkString(", ")}")
+  }
+
+  test("two concurrent ivfPqTopK consumers both finish, each on its own index") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val prefix = s"ivfpq_index_pid${ProcessHandle.current().pid()}_"
+    def indexDirs = TempDirs.root.toFile.list().filter(_.startsWith(prefix)).toSet
+    val before = indexDirs
+    val results = Seq.fill(2)(Future {
+      IvfPq.ivfPqTopK(queries, corpus, "vec_id", "embedding",
+        k = 5, nClusters = 8, nProbe = 4).collect().map(_.toSeq).toSet
+    }).map(Await.result(_, 10.minutes))
+    assert(results.head.nonEmpty)
+    assert(results.head === results.last, "same inputs, same top-k")
+    // the lazy frames may still be re-scanned, so both dirs stay until exit
+    assert((indexDirs -- before).size === 2)
   }
 }
